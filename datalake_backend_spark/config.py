@@ -163,6 +163,17 @@ def object_store_conf(
     return conf
 
 
+def _local_driver_memory() -> str:
+    """Driver heap for a local-mode session: ``$SPARK_GRAFT_DRIVER_MEM``
+    if set, else 16 GB capped at half of physical RAM — the JVM shares
+    the host with the Python driver, its workers and the page cache."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    phys_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**20
+    return f"{min(16 * 1024, phys_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "datalake_backend_spark",
     master: str | None = None,
@@ -187,10 +198,7 @@ def get_spark(
         # 10x scale-stress). Only effective for the process's FIRST
         # session (the JVM is launched with it); later get_spark calls
         # reuse the running JVM.
-        conf.setdefault(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-        )
+        conf.setdefault("spark.driver.memory", _local_driver_memory())
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

@@ -14,9 +14,12 @@ zone alongside the compatibility JSON.
 from __future__ import annotations
 
 import os
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from datalake_backend_spark.config import get_spark
 from datalake_backend_spark.core.cleaning import non_empty
@@ -31,6 +34,7 @@ from datalake_backend_spark.serving.views import (
     serve_gold_where,
 )
 from datalake_backend_spark.sources.readers import read_raw_json, split_corrupt
+from datalake_backend_spark.sources.versioned import VersionedTable
 from datalake_backend_spark.sources.writers import (
     json_array_document,
     write_json_document,
@@ -54,6 +58,16 @@ FRAME_COLS: dict[str, list[str]] = {
 
 STATUS_OK = 1
 STATUS_EMPTY = -1
+
+
+def _max_writes(domain: str, export_index: bool) -> int:
+    """Upper bound on the writes one upload submits: corrupt count,
+    silver, processed, gold, refine, one per split view, the export.
+    Pool threads start only while every started one is busy, so the
+    pool grows to the writes actually in flight."""
+    spec = SPLIT_SPECS.get(domain)
+    n_splits = len(spec.features) + len(spec.dist_cols) + 1 if spec else 0
+    return 5 + n_splits + int(export_index)
 
 
 @dataclass
@@ -86,6 +100,24 @@ class Engine:
         them): bronze → silver parquet + processed JSON → gold parquet +
         refined JSON → feature splits → optional bulk index export.
 
+        The zone writes do not depend on each other beyond gold, so
+        they run as a small graph of Spark jobs submitted from driver
+        threads to this one session (Spark schedules jobs from separate
+        threads side by side):
+
+        1. the corrupt-record count and the silver emptiness probe;
+        2. the silver zone (then the constraint report, if any), the
+           processed document and the gold zone;
+        3. as soon as gold is durable: the refined document, every
+           split view and the bulk-index export, while silver and
+           processed may still be running.
+
+        Every write is joined before the call returns, so all zones
+        (and the result) are complete when it does. If a write raises,
+        the writes already submitted are waited for and the first error
+        is re-raised. Each write thread inherits the caller's job group,
+        description and tags. The bronze cache is released either way.
+
         ``versioned_gold=True`` routes the gold zone through
         :class:`~datalake_backend_spark.sources.versioned.VersionedTable`:
         every upload commits a SNAPSHOT, so the upload history is a
@@ -106,107 +138,145 @@ class Engine:
         """
         pipe = get_pipeline(domain)
         raw = read_raw_json(self.spark, path, domain=domain)
-        clean, corrupt = split_corrupt(raw)
-        n_corrupt = corrupt.count()
-        silver = pipe.silver(clean)
-        if not non_empty(silver):
-            return ProcessResult(STATUS_EMPTY, domain, corrupt_docs=n_corrupt)
-
-        result = ProcessResult(STATUS_OK, domain, corrupt_docs=n_corrupt)
         zones = {
             "silver": os.path.join(out_dir, "silver", domain),
             "processed": os.path.join(out_dir, "processed", domain),
             "gold": os.path.join(out_dir, "gold", domain),
             "refine": os.path.join(out_dir, "refine", domain),
         }
+        report_path = os.path.join(out_dir, "constraints", domain)
+        idx_path = os.path.join(out_dir, "index", domain)
+        split_paths = {}
 
-        # zone layout at scale: partition by ingest date so time-bounded
-        # reprocessing and retention prune at the directory level
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
-        # row counts ride the write job as observe() metrics — the
-        # written parquet is not re-scanned just to count it
-        obs_silver = Observation()
-        write_table(
-            silver.withColumn("ingest_date", F.current_date()).observe(
-                obs_silver, F.count(F.lit(1)).alias("n")
-            ),
-            zones["silver"],
-            partition_by=["ingest_date"],
-        )
-        result.silver_rows = int(obs_silver.get["n"])
-
-        if constraints:
+        def write_silver() -> tuple[int, int]:
+            # zone layout at scale: partition by ingest date so
+            # time-bounded reprocessing and retention prune at the
+            # directory level. Row counts ride the write job as
+            # observe() metrics — the written parquet is not re-scanned
+            # just to count it.
+            obs = Observation()
+            write_table(
+                silver.withColumn("ingest_date", F.current_date()).observe(
+                    obs, F.count(F.lit(1)).alias("n")
+                ),
+                zones["silver"],
+                partition_by=["ingest_date"],
+            )
+            if not constraints:
+                return int(obs.get["n"]), 0
             from datalake_backend_spark.operators.constraints import (
                 check_constraints,
             )
 
-            report_path = os.path.join(out_dir, "constraints", domain)
             report = check_constraints(
                 self.spark.read.parquet(zones["silver"]), constraints
             )
             write_table(report, report_path)
-            report_df = self.spark.read.parquet(report_path)
-            result.constraint_violations = int(
-                report_df.agg(F.sum("violations")).first()[0] or 0
+            violations = (
+                self.spark.read.parquet(report_path).agg(F.sum("violations")).first()[0]
             )
+            return int(obs.get["n"]), int(violations or 0)
+
+        def write_processed() -> None:
+            # re-nested frame JSON (the reference's shape)
+            frame_cols = [c for c in FRAME_COLS[domain] if c in silver.columns]
+            detail_cols = [c for c in silver.columns if c not in frame_cols]
+            nested = renest_frames(
+                silver, frame_cols, detail_cols, sort_cols=detail_cols[:1]
+            )
+            write_json_document(
+                json_array_document(nested, sort_cols=frame_cols[:1]),
+                zones["processed"],
+            )
+
+        def write_gold() -> tuple[DataFrame, int, VersionedTable | None]:
+            # downstream sinks read the MATERIALIZED gold zone (cheap
+            # columnar scan) instead of recomputing the gold plan
+            gold = pipe.gold(silver)
+            if versioned_gold:
+                tbl = VersionedTable(zones["gold"])
+                v = tbl.commit(gold, op="upload")
+                return tbl.read(self.spark, v), int(tbl.manifest(v)["num_rows"]), tbl
+            obs = Observation()
+            write_table(gold.observe(obs, F.count(F.lit(1)).alias("n")), zones["gold"])
+            return self.spark.read.parquet(zones["gold"]), int(obs.get["n"]), None
+
+        errors: list[BaseException] = []  # in the order the writes raised them
+
+        def record_error(fut: Future) -> None:
+            if fut.exception() is not None:
+                errors.append(fut.exception())
+
+        # split_corrupt caches the bronze scan (``raw`` itself)
+        clean, corrupt = split_corrupt(raw)
+        try:
+            silver = pipe.silver(clean)
+            # leaving the pool's block waits for every write submitted
+            with ThreadPoolExecutor(max_workers=_max_writes(domain, export_index)) as pool:
+
+                def submit(fn, *args) -> Future:
+                    # wrapped per write: each thread gets its own copy of
+                    # the caller's local properties (job group,
+                    # description, tags)
+                    fut = pool.submit(inheritable_thread_target(self.spark)(fn), *args)
+                    fut.add_done_callback(record_error)
+                    return fut
+
+                n_corrupt = submit(corrupt.count)
+                if not non_empty(silver):
+                    return ProcessResult(
+                        STATUS_EMPTY, domain, corrupt_docs=n_corrupt.result()
+                    )
+                silver_done = submit(write_silver)
+                submit(write_processed)
+                gold_df, gold_rows, tbl = submit(write_gold).result()
+
+                submit(write_json_document, json_array_document(gold_df), zones["refine"])
+                if domain in SPLIT_SPECS:
+                    for name, df in run_splitter(gold_df, domain).items():
+                        split_paths[f"split/{name}"] = os.path.join(
+                            out_dir, "split", domain, name
+                        )
+                        submit(write_table, df, split_paths[f"split/{name}"])
+                if export_index:
+                    submit(
+                        write_bulk_export,
+                        gold_df,
+                        idx_path,
+                        f"datalake-{domain}-data",
+                        gold_df.columns[0],
+                    )
+        finally:
+            raw.unpersist()
+            if errors:
+                raise errors[0]
+
+        silver_rows, violations = silver_done.result()
+        result = ProcessResult(
+            STATUS_OK,
+            domain,
+            silver_rows=silver_rows,
+            gold_rows=gold_rows,
+            corrupt_docs=n_corrupt.result(),
+        )
+        if constraints:
+            result.constraint_violations = violations
             result.outputs["constraint_report"] = report_path
-
-        # processed zone: re-nested frame JSON (the reference's shape)
-        frame_cols = [c for c in FRAME_COLS[domain] if c in silver.columns]
-        detail_cols = [c for c in silver.columns if c not in frame_cols]
-        nested = renest_frames(
-            silver, frame_cols, detail_cols, sort_cols=detail_cols[:1]
-        )
-        write_json_document(
-            json_array_document(nested, sort_cols=frame_cols[:1]),
-            zones["processed"],
-        )
-
-        gold = pipe.gold(silver)
-        if versioned_gold:
-            from datalake_backend_spark.sources.versioned import VersionedTable
-
-            tbl = VersionedTable(zones["gold"])
-            v = tbl.commit(gold, op="upload")
-            result.gold_rows = int(tbl.manifest(v)["num_rows"])
-            gold_df = tbl.read(self.spark, v)
-            # selective serving reads route through footer-stats data
-            # skipping (serve_gold_where / query_gold)
-            register_versioned_gold(self.spark, domain, tbl, v)
-        else:
-            obs_gold = Observation()
-            write_table(
-                gold.observe(obs_gold, F.count(F.lit(1)).alias("n")),
-                zones["gold"],
-            )
-            result.gold_rows = int(obs_gold.get["n"])
-            # downstream consumers read the MATERIALIZED gold zone
-            # (cheap columnar scan) instead of recomputing the gold
-            # plan per sink
-            gold_df = self.spark.read.parquet(zones["gold"])
-        write_json_document(json_array_document(gold_df), zones["refine"])
-
-        if domain in SPLIT_SPECS:
-            for name, df in run_splitter(gold_df, domain).items():
-                split_path = os.path.join(out_dir, "split", domain, name)
-                write_table(df, split_path)
-                result.outputs[f"split/{name}"] = split_path
-
+        result.outputs.update(split_paths)
         if export_index:
-            idx_path = os.path.join(out_dir, "index", domain)
-            id_col = gold_df.columns[0]
-            write_bulk_export(gold_df, idx_path, f"datalake-{domain}-data", id_col)
             result.outputs["index"] = idx_path
-
-        if not versioned_gold:
+        # selective serving reads of a versioned gold route through
+        # footer-stats data skipping (serve_gold_where / query_gold)
+        if tbl is not None:
+            register_versioned_gold(self.spark, domain, tbl, gold_df)
+        else:
             register_gold(self.spark, domain, gold_df)
         result.outputs.update(zones)
         return result
 
     def refresh_serving_views(self) -> list[str]:
-        """(Re)create dashboard views over every registered gold table."""
+        """Dashboard views over every registered gold table; re-creates
+        only those over golds (re-)registered since the last call."""
         return register_serving_views(self.spark)
 
     def sql(self, query: str) -> DataFrame:

@@ -15,6 +15,8 @@ no per-document HTTP indexing loop (S11 anti-pattern,
 
 from __future__ import annotations
 
+from collections import defaultdict
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -147,25 +149,39 @@ def register_gold(spark: SparkSession, domain: str, gold_df: DataFrame) -> None:
     """Expose a gold DataFrame as ``gold_<domain>`` for the SQL layer."""
     _VERSIONED_GOLD.pop(domain, None)
     gold_df.createOrReplaceTempView(f"gold_{domain}")
+    _STALE[_session_id(spark)].add(f"gold_{domain}")
 
 
 #: domain → VersionedTable handle behind gold_<domain>, when versioned —
 #: lets selective serving reads route through footer-stats data skipping
 _VERSIONED_GOLD: dict[str, object] = {}
 
+#: session → gold views (re-)registered since its last
+#: :func:`register_serving_views`, whose dashboard views it re-creates
+_STALE: dict[str, set[str]] = defaultdict(set)
+
+
+def _session_id(spark: SparkSession) -> str:
+    return spark._jsparkSession.sessionUUID()
+
 
 def register_versioned_gold(
-    spark: SparkSession, domain: str, tbl, version: int | None = None
+    spark: SparkSession, domain: str, tbl, snapshot: DataFrame | None = None
 ) -> None:
     """Register ``gold_<domain>`` over a :class:`VersionedTable`
-    snapshot AND remember the handle: the dashboard views read the
-    consistent snapshot as before, while selective queries
-    (:func:`serve_gold_where`) open only the files whose footer stats /
-    partition values can match — at 100 TB the dashboard aggregates
-    scan the snapshot once, but every point/range lookup (one tracker,
-    one date band) touches a handful of files instead of the table."""
-    tbl.read(spark, version).createOrReplaceTempView(f"gold_{domain}")
+    snapshot (``snapshot``, a frame the caller already read from
+    ``tbl``; the latest one when omitted) AND remember the handle: the
+    dashboard views read the consistent snapshot as before, while
+    selective queries (:func:`serve_gold_where`) open only the files
+    whose footer stats / partition values can match — at 100 TB the
+    dashboard aggregates scan the snapshot once, but every point/range
+    lookup (one tracker, one date band) touches a handful of files
+    instead of the table."""
+    if snapshot is None:
+        snapshot = tbl.read(spark)
+    snapshot.createOrReplaceTempView(f"gold_{domain}")
     _VERSIONED_GOLD[domain] = tbl
+    _STALE[_session_id(spark)].add(f"gold_{domain}")
 
 
 def serve_gold_where(
@@ -244,15 +260,28 @@ def search_top_docs(
     )
 
 
-def register_serving_views(spark: SparkSession, domains: list[str] | None = None) -> list[str]:
-    """Create every dashboard view whose gold source is registered.
-    Returns the view names created."""
+def register_serving_views(spark: SparkSession) -> list[str]:
+    """Make sure every dashboard view whose gold source is registered
+    exists. Returns those view names.
+
+    Only views over a gold re-registered since the last call (or views
+    that were dropped) are re-created: a call after one upload costs a
+    catalog probe per gold source, not a catalog listing plus a
+    re-creation of every view."""
+    stale = _STALE[_session_id(spark)]
     available = {
-        t.name for t in spark.catalog.listTables() if t.name.startswith("gold_")
+        src for src in set(VIEW_SOURCES.values()) if spark.catalog.tableExists(src)
     }
-    created = []
+    fresh = available - stale
+    # unmarked before the views are re-created, so a gold registered
+    # meanwhile stays marked for the next call
+    stale -= available
+    names = []
     for name, sql in DASHBOARD_VIEWS.items():
-        if VIEW_SOURCES[name] in available:
+        src = VIEW_SOURCES[name]
+        if src not in available:
+            continue
+        if src not in fresh or not spark.catalog.tableExists(name):
             spark.sql(f"CREATE OR REPLACE TEMP VIEW {name} AS {sql}")
-            created.append(name)
-    return created
+        names.append(name)
+    return names

@@ -34,8 +34,42 @@ def test_vehicle_lifecycle(engine, spark, tmp_path):
     assert len(processed[0]["detections"]) == 2
     refined = json.loads(spark.read.text(res.outputs["refine"]).collect()[0].value)
     assert refined[0]["vehicle_type"] == "car"
-    # splits + index export landed
-    assert any(k.startswith("split/") for k in res.outputs)
+    # every split view landed with the fixture's one gold track
+    splits = {
+        k.removeprefix("split/"): spark.read.parquet(v).collect()
+        for k, v in res.outputs.items()
+        if k.startswith("split/")
+    }
+    assert sorted(splits) == sorted([
+        "identity", "movement", "lanes", "violations", "presence",
+        "dist_vehicle_type", "dist_vehicle_color", "dist_most_common_lane",
+        "dist_direction", "summary",
+    ])
+    for name in ("identity", "movement", "lanes", "violations", "presence"):
+        assert [r.tracker_id for r in splits[name]] == [1], name
+    assert splits["identity"][0].vehicle_type == "car"
+    mv = splits["movement"][0]
+    assert (mv.avg_speed, mv.max_speed, mv.min_speed, mv.direction) == (20.0, 30.0, 10.0, "Up")
+    ln = splits["lanes"][0]
+    assert (ln.initial_lane, ln.final_lane, ln.lane_changes) == ("Left Lane", "Right Lane", 1)
+    vio = splits["violations"][0]
+    assert (vio.red_light_violation_count, vio.line_crossing_count) == (1, 1)
+    pr = splits["presence"][0]
+    assert (pr.duration_seconds, pr.frame_count, pr.stopped_duration) == (10.0, 3, 5.0)
+    dists = {
+        name: [(r.value, r.n, r.pct) for r in rows]
+        for name, rows in splits.items()
+        if name.startswith("dist_")
+    }
+    assert dists == {
+        "dist_vehicle_type": [("car", 1, 100.0)],
+        "dist_vehicle_color": [("red", 1, 100.0)],
+        "dist_most_common_lane": [("Right Lane", 1, 100.0)],
+        "dist_direction": [("Up", 1, 100.0)],
+    }
+    summary = splits["summary"][0]
+    assert (summary.n_rows, summary.avg_avg_speed, summary.sum_frame_count) == (1, 20.0, 3)
+    # index export landed
     idx = [r.value for r in spark.read.text(res.outputs["index"]).collect()]
     assert json.loads(idx[0])["index"]["_index"] == "datalake-vehicle-data"
 
@@ -45,6 +79,130 @@ def test_vehicle_lifecycle(engine, spark, tmp_path):
     assert engine.sql("SELECT total_vehicles FROM serving_vehicle_totals").collect()[
         0
     ].total_vehicles == 1
+
+
+def test_process_document_releases_bronze_cache(engine, spark, tmp_path):
+    """The bronze scan split_corrupt caches is unpersisted once every
+    write has joined, on the empty-document early return too: no
+    upload leaves a persisted RDD behind in a long-lived session."""
+    jsc = spark.sparkContext._jsc
+
+    def persisted() -> set[int]:
+        return set(jsc.getPersistentRDDs().keySet())
+
+    empty = tmp_path / "empty.json"
+    empty.write_text(json.dumps([]))
+    uploads = [
+        (write_fixture(tmp_path, "vehicle"), "vehicle", STATUS_OK),
+        (str(empty), "vehicle", STATUS_EMPTY),
+    ]
+    for path, domain, status in uploads:
+        before = persisted()
+        res = engine.process_document(
+            path, domain, str(tmp_path / "lake"), export_index=True
+        )
+        assert res.status == status
+        after = persisted()
+        assert after <= before, (status, after - before)
+
+
+def test_failed_write_fails_the_call_after_join(engine, spark, tmp_path, monkeypatch):
+    """A write that raises makes process_document raise that error,
+    but only after every write already submitted has finished: no job
+    of the call is still running when the error reaches the caller."""
+    from datalake_backend_spark import engine as engine_mod
+
+    def down(*args, **kwargs):
+        raise RuntimeError("index sink down")
+
+    monkeypatch.setattr(engine_mod, "write_bulk_export", down)
+    sc = spark.sparkContext
+    jsc = sc._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    out = str(tmp_path / "lake")
+    sc.setJobGroup("pd-failing-upload", "upload with a failing sink")
+    try:
+        with pytest.raises(RuntimeError, match="index sink down"):
+            engine.process_document(
+                write_fixture(tmp_path, "vehicle"), "vehicle", out, export_index=True
+            )
+    finally:
+        jsc.clearJobGroup()
+    jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = set(tracker.getJobIdsForGroup("pd-failing-upload"))
+    assert jobs and not jobs & set(tracker.getActiveJobsIds())
+    # the sibling writes submitted with the failing one all landed
+    for zone in ("refine/vehicle", "split/vehicle/summary", "split/vehicle/identity"):
+        assert os.path.exists(os.path.join(out, zone, "_SUCCESS")), zone
+    assert set(jsc.getPersistentRDDs().keySet()) <= before
+
+
+@pytest.mark.parametrize("versioned", [False, True])
+def test_upload_jobs_carry_caller_job_group(engine, spark, tmp_path, versioned):
+    """Every Spark job process_document launches, from whichever of its
+    write threads, runs under the job group the caller set, so the
+    caller can find (or cancel) all of an upload's jobs."""
+    assert not spark.streams.active  # no other source of jobs meanwhile
+    sc = spark.sparkContext
+    jsc = sc._jsc
+    tracker = sc.statusTracker()
+
+    def probe(group: str) -> int:
+        """Id of a job launched now (job ids are sequential)."""
+        sc.setJobGroup(group, group)
+        spark.range(1).collect()
+        jsc.sc().listenerBus().waitUntilEmpty()
+        return max(tracker.getJobIdsForGroup(group))
+
+    path = write_fixture(tmp_path, "vehicle")
+    group = f"pd-upload-{versioned}"
+    try:
+        first = probe(f"pd-before-{versioned}")
+        sc.setJobGroup(group, "one upload")
+        res = engine.process_document(
+            path, "vehicle", str(tmp_path / "lake"),
+            export_index=True, versioned_gold=versioned,
+        )
+        last = probe(f"pd-after-{versioned}")
+    finally:
+        jsc.clearJobGroup()
+    assert res.status == STATUS_OK
+    launched = set(range(first + 1, last))
+    assert len(launched) > 10
+    assert set(tracker.getJobIdsForGroup(group)) == launched
+
+
+def test_reupload_refreshes_only_its_serving_views(engine, spark, tmp_path):
+    """Re-uploading a domain with new content re-creates the dashboard
+    views over its gold, which then serve the new upload, while the
+    views over untouched golds stay listed; a dropped view comes back."""
+    out = str(tmp_path / "lake")
+    for domain in ("vehicle", "parking"):
+        engine.process_document(write_fixture(tmp_path, domain), domain, out)
+    views = engine.refresh_serving_views()
+    assert {"serving_vehicle_totals", "serving_parking_totals"} <= set(views)
+    assert engine.sql(
+        "SELECT total_vehicles FROM serving_vehicle_totals"
+    ).first().total_vehicles == 1
+    parking_slots = engine.sql("SELECT total_slots FROM serving_parking_totals").first()
+
+    doc = DOCS["vehicle"]()
+    # a second track in the last frame with detections
+    doc[2]["detections"].append(dict(doc[2]["detections"][0], tracker_id=7))
+    p = tmp_path / "vehicle_v2.json"
+    p.write_text(json.dumps(doc))
+    res = engine.process_document(str(p), "vehicle", out, versioned_gold=True)
+    assert res.gold_rows == 2
+    assert engine.refresh_serving_views() == views
+    assert engine.sql(
+        "SELECT total_vehicles FROM serving_vehicle_totals"
+    ).first().total_vehicles == 2
+    assert engine.sql("SELECT total_slots FROM serving_parking_totals").first() == parking_slots
+
+    spark.catalog.dropTempView("serving_parking_totals")
+    assert engine.refresh_serving_views() == views
+    assert engine.sql("SELECT total_slots FROM serving_parking_totals").first() == parking_slots
 
 
 def test_empty_document_status(engine, tmp_path):
@@ -68,6 +226,21 @@ def test_every_domain_lifecycle(engine, tmp_path, domain):
     res = engine.process_document(path, domain, str(tmp_path / "lake"))
     assert res.status == STATUS_OK, domain
     assert res.gold_rows > 0
+
+
+def test_local_driver_memory_default(monkeypatch):
+    """The local-mode driver heap defaults to 16 GB capped at half of
+    physical RAM; SPARK_GRAFT_DRIVER_MEM overrides it."""
+    from datalake_backend_spark import config
+
+    sysconf = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": 15 * 2**30 // 4096}
+    monkeypatch.setattr(config.os, "sysconf", sysconf.__getitem__)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    assert config._local_driver_memory() == "7680m"
+    sysconf["SC_PHYS_PAGES"] = 64 * 2**30 // 4096
+    assert config._local_driver_memory() == "16384m"
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "6g")
+    assert config._local_driver_memory() == "6g"
 
 
 def test_object_store_conf_shape(monkeypatch):
