@@ -19,6 +19,11 @@ sequential per-query times measure plan changes in isolation, while the
 concurrent total measures scheduler-overlapped steady-state throughput —
 round-over-round deltas should be read from the sequential numbers.
 
+Each pass also reports ``codegen_compiles`` / ``codegen_compiles_sequential``:
+the Janino compiles it ran, i.e. generated classes the session's code
+cache could not serve. Unlike the wall times it is deterministic enough
+to compare between two runs.
+
 Env: SPARK_GRAFT_SF_DIR            (default /root/testdata/sf0.1)
      SPARK_GRAFT_CPUS              (default 32)
      SPARK_GRAFT_BENCH_CONCURRENCY (default 6; 1 = sequential only)
@@ -43,6 +48,7 @@ from concurrent.futures import ThreadPoolExecutor
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from datalake_backend_spark import get_spark
+from datalake_backend_spark.config import codegen_compiles
 from datalake_backend_spark.queries import QUERIES
 
 
@@ -106,6 +112,7 @@ def main() -> None:
             return name, f"ERR:{type(e).__name__}"
         return name, round(time.perf_counter() - t0, 3)
 
+    c0 = codegen_compiles(spark)
     t0 = time.perf_counter()
     if workers > 1:
         with ThreadPoolExecutor(max_workers=workers) as ex:
@@ -113,6 +120,7 @@ def main() -> None:
     else:
         timings = dict(map(run, QUERIES.items()))
     total = round(time.perf_counter() - t0, 3)
+    compiles = codegen_compiles(spark) - c0
 
     result = {
         "metric": "total_query_wall_seconds",
@@ -124,12 +132,15 @@ def main() -> None:
         "master": eff_master,
         "default_parallelism": eff_parallelism,
         "edge_build_seconds": edge_build_seconds,
+        "codegen_compiles": compiles,
     }
 
     if workers > 1 and os.environ.get("SPARK_GRAFT_BENCH_SEQUENTIAL", "1") == "1":
+        c0 = codegen_compiles(spark)
         t0 = time.perf_counter()
         seq = dict(map(run, QUERIES.items()))
         result["sequential_seconds"] = round(time.perf_counter() - t0, 3)
+        result["codegen_compiles_sequential"] = codegen_compiles(spark) - c0
         result["queries_sequential"] = seq
 
     # The driver records only the TAIL of stdout, and the full result
@@ -181,9 +192,15 @@ def main() -> None:
         "errors": errors,
         "full": "BENCH_FULL.json",
         "edge_build_seconds": edge_build_seconds,
+        "codegen_compiles": compiles,
     }
-    if "sequential_seconds" in result:
-        compact["sequential_seconds"] = result["sequential_seconds"]
+    # the sequential pass's totals, when it ran
+    seq_totals = {
+        k: result[k]
+        for k in ("sequential_seconds", "codegen_compiles_sequential")
+        if k in result
+    }
+    compact.update(seq_totals)
     compact["queries_pass"] = "sequential" if seq_pass else "concurrent"
     compact["queries"] = shorten(reported)
 
@@ -214,12 +231,12 @@ def main() -> None:
         "errors_count": len(errors),
         "errors": errors[:8],
         "edge_build_seconds": edge_build_seconds,
+        "codegen_compiles": compiles,
         "full": "BENCH_FULL.json",
         "queries": shorten(dict(numeric[:12])),
         "queries_note": "12 slowest; full map in BENCH_FULL.json",
     }
-    if "sequential_seconds" in result:
-        summary["sequential_seconds"] = result["sequential_seconds"]
+    summary.update(seq_totals)
     print(json.dumps(compact, separators=(",", ":")))
     print(json.dumps(summary, separators=(",", ":")))
     sys.stdout.flush()

@@ -16,6 +16,12 @@ AQE-enabled session. Tuning philosophy:
   ``spark_config.py:36-37``).
 * **UTC session timezone** — timestamps compare bit-exactly against
   external oracles and across clusters.
+* **Generated-code cache sized to the working set** — a long-lived
+  session only pays off if each plan shape runs with code it already
+  compiled. Spark's default of 100 cached classes thrashes: an upload
+  generates ~58 classes, an ingest pass of ten ~590 and a registry
+  sweep ~3.6k, so every upload recompiled. At 8192 entries (census in
+  ``ENGINE_CONF``) a warm session recompiles almost nothing.
 
 Object-store settings are deployment config, not engine code:
 :func:`object_store_conf` builds the S3A/MinIO conf (magic committer,
@@ -32,6 +38,9 @@ from pyspark.sql import SparkSession
 # Local test parallelism; on a real cluster the master/size come from
 # spark-submit and these are ignored.
 _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+# Directory that contains the ``datalake_backend_spark`` package.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 #: Defaults applied to every session. Values chosen to be valid both on
 #: local[N] (single JVM) and on a large cluster (AQE re-plans at runtime).
@@ -77,6 +86,18 @@ ENGINE_CONF: dict[str, str] = {
     # measured 6x slower than the expression-codegen fallback this
     # threshold switches to.
     "spark.sql.codegen.hugeMethodLimit": "8000",
+    # Generated-class cache (static conf, default 100 entries). One
+    # perfbench ingest pass generates ~590 distinct classes and a sweep
+    # of the 259-row registry ~3.6k, so at the default every upload
+    # recompiled its Janino classes and HotSpot re-JITted them from the
+    # interpreter. The working set is ~4.2k classes; Guava splits
+    # maximumSize across 4 segments that evict independently, hence 2x
+    # headroom. Measured on a 4-vCPU VM: Janino compiles in an ingest
+    # pass 583 -> 10 (loaded classes 1,217 -> 188, JIT time 20.7 ->
+    # 16.1 s), in bench.py's second registry pass at sf0.1 5,557 ->
+    # 234; peak RSS +1-2%. tests/test_engine.py::
+    # test_reupload_reuses_generated_code pins zero recompiles.
+    "spark.sql.codegen.cache.maxEntries": "8192",
     # TakeOrderedAndProject materializes a k-sized buffer PER PARTITION;
     # past ~10M rows that buffer (not the sort) is the memory hazard —
     # k=1e9 allocates gigabytes per task and stalls the whole JVM in
@@ -201,11 +222,26 @@ def get_spark(
         conf.setdefault("spark.driver.memory", _local_driver_memory())
     if extra_conf:
         conf.update(extra_conf)
+    # Python workers import the engine (codec UDFs, the media
+    # DataSource); ship its location so that works from any cwd, not
+    # only from the directory that contains the package
+    key = "spark.executorEnv.PYTHONPATH"
+    paths = [p for p in conf.get(key, "").split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in paths:
+        conf[key] = os.pathsep.join([*paths, _PACKAGE_ROOT])
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Janino compiles this JVM has run so far (Spark's
+    ``CodegenMetrics`` compilation-time histogram count). Its delta over
+    a workload counts the generated classes the cache could not serve."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def stop_spark() -> None:

@@ -1342,7 +1342,7 @@ def spearman_rho(
         # data-fingerprint key): a repeat call — dashboards, the
         # bench's concurrent-then-sequential passes — skips the job;
         # the values only ever steer bucket balance and read sizing
-        memo_key = _memo_key(fact, [x_col, y_col], n_buckets)
+        memo_key = _memo_key(fact, [x_col, y_col], n_buckets, "spearman")
         memoed = _BOUNDS_MEMO.get(memo_key) if memo_key else None
         if memoed is None:
             qs = [i / n_buckets for i in range(1, n_buckets)]

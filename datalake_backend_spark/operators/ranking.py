@@ -141,14 +141,22 @@ def _data_fingerprint(df: DataFrame) -> str:
     return f"{len(files)}|{total}|{mx}"
 
 
-def _memo_key(df: DataFrame, order_cols: list[str], n_buckets: int) -> str | None:
+def _memo_key(
+    df: DataFrame, order_cols: list[str], n_buckets: int, namespace: str = "cuts"
+) -> str | None:
+    """Memo key over plan, order, bucket count and data fingerprint.
+    ``namespace`` separates callers whose entries have different shapes
+    (the kernel's ``(bounds, n)`` vs spearman's 4-tuple), so a
+    plan-identical call of one never unpacks the other's entry."""
     import hashlib
 
     try:
         plan = df._jdf.queryExecution().analyzed().toString()
     except Exception:  # noqa: BLE001 — connect-mode or API drift
         return None
-    raw = f"{plan}|{order_cols}|{n_buckets}|{_data_fingerprint(df)}".encode()
+    raw = (
+        f"{namespace}|{plan}|{order_cols}|{n_buckets}|{_data_fingerprint(df)}"
+    ).encode()
     return hashlib.md5(raw).hexdigest()
 
 

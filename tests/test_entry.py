@@ -139,6 +139,9 @@ def test_bench_emits_one_json_line():
     assert isinstance(d["default_parallelism"], int)
     assert d["default_parallelism"] >= 1
     assert d["errors_count"] == 0 and d["errors"] == []
+    # Janino compiles of the pass: a deterministic counter beside the
+    # wall times
+    assert isinstance(d["codegen_compiles"], int) and d["codegen_compiles"] >= 0
     from datalake_backend_spark.queries import QUERIES
 
     assert d["queries_count"] == len(QUERIES)
@@ -150,7 +153,9 @@ def test_bench_emits_one_json_line():
     errs = {k: v for k, v in c["queries"].items() if isinstance(v, str)}
     assert not errs, errs
     assert c["errors"] == []
+    assert c["codegen_compiles"] == d["codegen_compiles"]
     # the complete per-query record (full names) is persisted at the
     # redirected path — the committed sf0.1 artifact is untouched
     full = json.load(open(full_path))
     assert set(full["queries"]) == set(QUERIES)
+    assert full["codegen_compiles"] == d["codegen_compiles"]

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -1790,6 +1791,38 @@ def test_spearman_rho_monotone_and_ties(spark):
     )
     rho = spearman_rho(tied, "x", "y").collect()[0].rho
     assert 0.9 < rho < 1.0
+
+
+@pytest.mark.parametrize("spearman_first", [True, False])
+def test_spearman_and_kernel_memo_entries_stay_apart(spark, spearman_first):
+    """spearman_rho memoizes 4-tuples in the kernel's boundary-cut memo,
+    whose own entries are (bounds, n) pairs. Back-to-back calls on a
+    plan-identical frame with the same order columns and bucket count
+    must each read their own entry, in either order."""
+    from datalake_backend_spark.operators import ranking
+    from datalake_backend_spark.operators.distributions import spearman_rho
+
+    d = spark.createDataFrame(
+        [(1, 10), (2, 20), (3, 25), (4, 40)], "x bigint, y bigint"
+    )
+
+    def rho():
+        return spearman_rho(d, "x", "y").collect()[0].rho
+
+    def running():
+        out = ranking.keyed_running_sum(d.select("x", "y"), [], ["x", "y"], "y")
+        return sorted((r.x, r.running_sum) for r in out.collect())
+
+    ranking.release_caches()
+    try:
+        if spearman_first:
+            got_rho, got_running = rho(), running()
+        else:
+            got_running, got_rho = running(), rho()
+    finally:
+        ranking.release_caches()
+    assert abs(got_rho - 1.0) < 1e-12
+    assert got_running == [(1, 10), (2, 30), (3, 55), (4, 95)]
 
 
 def test_kaplan_meier_censoring_and_full_death(spark):
